@@ -32,16 +32,8 @@ import scala.collection.immutable.ListMap
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // measure with the production extensions on (TopKPerGroup
-      // rewrite + registered SQL functions), same as Verify
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.create("graft-bench", cpus)
     // warm the session (codegen compiler, shuffle machinery, FS client,
     // broadcast + hash-join paths) so the first measured query isn't
     // charged JVM/executor startup — standard bench hygiene; every

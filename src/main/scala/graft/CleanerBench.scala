@@ -26,14 +26,7 @@ object CleanerBench {
   def main(args: Array[String]): Unit = {
     val lmDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val docsPath = args.lift(1).getOrElse("target/sf1/documents.parquet")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create("graft-cleaner-bench", GraftSession.cpus(32))
     import spark.implicits._
 
     def time[A](f: => A): (A, Double) = {

@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.graft.{AsOfJoinStrategy, GraftFunctions, TopKPerGroupRewrite, TopKPerGroupStrategy}
 
-/** Session-extension entry point for cluster deployment:
-  * `--conf spark.sql.extensions=graft.GraftExtensions` registers the
-  * native vector functions, the top-k-per-group optimizer rewrite
-  * (window `row_number() <= k` → bounded-heap physical operator) and
-  * its planner strategy in every session the cluster creates. */
+/** Session extensions: the native SQL functions, the top-k-per-group
+  * optimizer rewrite (window `row_number() <= k` → bounded-heap
+  * physical operator), and the planner strategies for the TopKPerGroup
+  * and as-of join nodes. [[GraftSession]] puts them on every session
+  * graft builds; `--conf spark.sql.extensions=graft.GraftExtensions`
+  * does the same for sessions a cluster creates. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.functions.foreach(ext.injectFunction)

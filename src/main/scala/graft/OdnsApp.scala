@@ -44,12 +44,9 @@ object OdnsApp {
       .orElse(cfg.archiveRoot)
       .getOrElse(sys.error("config: missing [paths] archive-root"))
 
-    val spark = SparkSession.builder()
-      .appName("odns-importer")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    // spark-submit chooses the master; cores only size the shuffle
+    val spark = GraftSession.create("odns-importer", GraftSession.cpus(32),
+      local = false)
     // compute the exit code first: sys.exit inside the try would skip
     // the finally, leaving the session to the shutdown hook
     val exitCode =

@@ -16,6 +16,7 @@ object OdnsPipeline {
   val Protocols = Seq("tcp", "udp")
   val ArchiveExtension = "csv.gz"
 
+  /** `rows` is what the store holds for `protocol` after the call. */
   case class Result(protocol: String, archive: Option[String], rows: Long)
 
   /** Ingest the most recent archive for each protocol (the reference's
@@ -35,7 +36,8 @@ object OdnsPipeline {
       else {
         val df = OdnsCsv.read(spark, proto, archives: _*)
         JdbcSink.refreshPartition(df, target, "protocol", proto, batchSize)
-        Result(proto, Some(archives.last), JdbcSink.count(target))
+        Result(proto, Some(archives.last),
+          JdbcSink.countWhere(target, "protocol", proto))
       }
     }
 

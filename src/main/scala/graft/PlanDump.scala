@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for a comma-separated list of
   * registered queries (SPARK_GRAFT_PLAN_QUERIES) into
   * SPARK_GRAFT_PLAN_DIR/<name>_<SPARK_GRAFT_PLAN_TAG>.txt — the
@@ -10,18 +8,11 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "/root/repo/plans/r14")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
     val names = sys.env.getOrElse("SPARK_GRAFT_PLAN_QUERIES", "")
       .split(',').map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create("graft-plandump", GraftSession.cpus(8))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       SparkEntry.queries.get(n) match {

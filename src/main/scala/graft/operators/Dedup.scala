@@ -165,9 +165,10 @@ object Dedup {
     // bbit, jaccard_est, lsh_recall, lsh_precision) re-ran the band
     // build per query. The presentation sort stays OUTSIDE the
     // snapshot (parquet read-back order is file order, so the gated
-    // output's contract sort must be applied on the read).
-    Analytics.snapshotTable(spark, dir,
-        s"minhash_lsh_${bucketCap.getOrElse(0)}")(
+    // output's contract sort must be applied on the read). The tag
+    // keys the Option itself: None (uncapped) and Some(0) (every
+    // bucket dropped) are different tables.
+    Analytics.snapshotTable(spark, dir, s"minhash_lsh_$bucketCap")(
       minhashLshPairs(spark, dir, bucketCap))
       .orderBy(col("doc_a"), col("doc_b"))
   }

@@ -111,13 +111,26 @@ object JdbcSink {
   /** DELETE existing rows matching `column = value`
     * (dataimporter.py:187-199). Identifier names come from trusted config,
     * values go through a prepared statement. */
-  def deleteWhere(target: Target, column: String, value: String): Unit = {
+  def deleteWhere(target: Target, column: String, value: String): Unit =
+    whereColumnIs(target, "DELETE FROM", column, value)(_.executeUpdate())
+
+  /** Rows matching `column = value`, under the same identifier check
+    * and prepared statement as [[deleteWhere]]. */
+  def countWhere(target: Target, column: String, value: String): Long =
+    whereColumnIs(target, "SELECT COUNT(*) FROM", column, value) { st =>
+      val rs = st.executeQuery(); rs.next(); rs.getLong(1)
+    }
+
+  private def checkIdent(column: String): Unit =
     require(column.matches("[A-Za-z_][A-Za-z0-9_]*"), s"bad column: $column")
+
+  private def whereColumnIs[A](target: Target, verb: String, column: String,
+      value: String)(run: java.sql.PreparedStatement => A): A = {
+    checkIdent(column)
     val conn = target.connection()
     try {
-      val st = conn.prepareStatement(
-        s"DELETE FROM ${target.table} WHERE $column = ?")
-      try { st.setString(1, value); st.executeUpdate() }
+      val st = conn.prepareStatement(s"$verb ${target.table} WHERE $column = ?")
+      try { st.setString(1, value); run(st) }
       finally st.close()
     } finally conn.close()
   }
@@ -141,8 +154,7 @@ object JdbcSink {
       batchSize: Int = 1000): Unit = {
     val cols = df.columns.toSeq
     require(keyCols.nonEmpty && keyCols.forall(cols.contains), s"bad keys: $keyCols")
-    (cols ++ keyCols).foreach(c =>
-      require(c.matches("[A-Za-z_][A-Za-z0-9_]*"), s"bad column: $c"))
+    (cols ++ keyCols).foreach(checkIdent)
     val valCols = cols.filterNot(keyCols.contains)
     val updateSql = s"UPDATE ${target.table} SET " +
       valCols.map(c => s"$c = ?").mkString(", ") +

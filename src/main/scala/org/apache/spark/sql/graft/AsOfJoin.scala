@@ -131,17 +131,14 @@ object AsOfJoinStrategy extends SparkStrategy {
 object AsOf {
   /** As-of join `left` to `right`: latest right row per key with
     * rightTime ≤ leftTime; columns resolved by name; right tie-break
-    * columns pin the winner among equal times. Registers the planner
-    * strategy on first use (GraftExtensions also injects it). */
+    * columns pin the winner among equal times. The session must carry
+    * [[graft.GraftExtensions]], which plans the node (see
+    * [[graft.GraftSession]]). */
   def join(left: DataFrame, right: DataFrame,
       leftKeys: Seq[String], rightKeys: Seq[String],
       leftTime: String, rightTime: String,
       rightTieBreak: Seq[String] = Nil): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
     val la = left.queryExecution.analyzed
     val ra = right.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String): Attribute =

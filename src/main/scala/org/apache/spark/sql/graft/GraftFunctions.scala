@@ -1,12 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SQL-level registration of the native vector expressions, so
+/** SQL names of the native expressions, so
   * `spark.sql("SELECT float_vec_dot(a, b) ...")` works alongside the
-  * Column API. */
+  * Column API. [[graft.GraftExtensions]] injects them into every
+  * session it builds. */
 object GraftFunctions {
 
   private def info(name: String, usage: String) =
@@ -42,11 +42,4 @@ object GraftFunctions {
     (FunctionIdentifier("log2_fixed"),
       info("log2_fixed", "log2_fixed(x) - fixed-point log2 at scale 2^20 (m*2^20 + 20 binary fraction digits); null outside 1 <= x < 2^43"),
       (es: Seq[Expression]) => Log2Fixed(es.head)))
-
-  /** Register on a live session (tests, notebooks). */
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (ident, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(ident.funcName, builder, "built-in")
-    }
 }

@@ -176,15 +176,12 @@ object TopK {
   /** Top `k` rows per group of `df`, ordered by `order` (must be a
     * total order — include a tie-break column). Columns are resolved by
     * name against the analyzed child so the plan ships fully resolved
-    * attribute references to executors. Registers the planner strategy
-    * on first use via the public experimental hook. */
+    * attribute references to executors. The session must carry
+    * [[graft.GraftExtensions]], which plans the node (see
+    * [[graft.GraftSession]]). */
   def perGroup(df: DataFrame, groupCols: Seq[String], order: Seq[SortKey],
       k: Int): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
-    }
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Attribute =
       analyzed.output.find(_.name.equalsIgnoreCase(n)).getOrElse(

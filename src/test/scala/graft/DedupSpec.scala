@@ -72,6 +72,19 @@ class DedupSpec extends SparkSpec {
     assert(tight.subsetOf(uncapped), "a binding cap may only drop pairs, never invent them")
   }
 
+  test("LSH snapshot keys the cap option: a Some(0) build is never served to an uncapped call") {
+    def pairs(cap: Option[Int]) = Dedup.ddMinhashLsh(spark, sf0001, cap).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    graft.operators.Analytics.releaseEdgeSnapshots(spark)
+    try {
+      assert(pairs(Some(0)).isEmpty, "cap 0 drops every bucket")
+      val uncapped = pairs(None)
+      val inline = withConf("spark.graft.graph.edgeSnapshot" -> "false")(pairs(None))
+      assert(inline.nonEmpty, "fixture must produce candidate pairs")
+      assert(uncapped == inline, "uncapped call read the Some(0) snapshot")
+    } finally graft.operators.Analytics.releaseEdgeSnapshots(spark)
+  }
+
   test("hot-shingle df cap above the observed max is result-invariant; a tight cap only removes pairs") {
     import org.apache.spark.sql.functions._
     val maxDf = graft.Tables.documents(spark, sf0001)
@@ -123,16 +136,12 @@ class DedupSpec extends SparkSpec {
     // distributed branch (the one a 100 TB pair graph takes) would
     // otherwise ship untested. Force it with limit 0 and assert exact
     // row identity against the default union-find path.
-    val key = "spark.graft.components.driverEdgeLimit"
-    val viaUnionFind = Dedup.ddComponents(spark, sf0001).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    spark.conf.set(key, "0")
-    try {
-      val viaPropagation = Dedup.ddComponents(spark, sf0001).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      assert(viaUnionFind.nonEmpty, "fixture must produce a non-trivial pair graph")
-      assert(viaPropagation.toSeq == viaUnionFind.toSeq,
-        "label propagation must emit the same (doc_id, min-reachable-id) labeling")
-    } finally spark.conf.unset(key)
+    def labels() = Dedup.ddComponents(spark, sf0001).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val viaUnionFind = labels()
+    val viaPropagation = withConf("spark.graft.components.driverEdgeLimit" -> "0")(labels())
+    assert(viaUnionFind.nonEmpty, "fixture must produce a non-trivial pair graph")
+    assert(viaPropagation == viaUnionFind,
+      "label propagation must emit the same (doc_id, min-reachable-id) labeling")
   }
 }

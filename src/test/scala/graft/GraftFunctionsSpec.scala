@@ -3,12 +3,10 @@ package graft
 import graft.functions.JoinOps
 import graft.operators.{Dedup, TextAnalysis}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.GraftFunctions
 
 class GraftFunctionsSpec extends SparkSpec {
 
   test("native vector functions are callable from SQL") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT float_vec_dot(array(float(1.0), float(2.0)), array(float(3.0), float(4.0))) AS d,
         |       float_vec_norm(array(float(3.0), float(4.0))) AS n""".stripMargin)

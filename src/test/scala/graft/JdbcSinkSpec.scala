@@ -61,6 +61,7 @@ class JdbcSinkSpec extends SparkSpec {
     val back = spark.read.format("jdbc")
       .option("url", t.url).option("dbtable", t.table).load()
     assert(back.filter($"PROTOCOL" === "udp").count() == 3)
+    assert(JdbcSink.countWhere(t, "protocol", "udp") == 3)
     val asnField = back.schema.find(_.name.equalsIgnoreCase("asn_request")).get
     assert(asnField.dataType.typeName == "double")
   }
@@ -69,6 +70,9 @@ class JdbcSinkSpec extends SparkSpec {
     val t = freshTarget("guard_db")
     intercept[IllegalArgumentException] {
       JdbcSink.deleteWhere(t, "protocol; DROP TABLE x", "tcp")
+    }
+    intercept[IllegalArgumentException] {
+      JdbcSink.countWhere(t, "protocol; DROP TABLE x", "tcp")
     }
   }
 

@@ -29,6 +29,7 @@ class OdnsPipelineSpec extends SparkSpec {
     assert(results.map(_.protocol) == Seq("tcp", "udp"))
     // newest tcp archive (6 rows) chosen, not the older 4-row one
     assert(results.head.archive.exists(_.endsWith("tcp_scan_2026-08-02.csv.gz")))
+    assert(results.map(_.rows) == Seq(6, 3), "rows are per protocol, not the whole table")
     assert(JdbcSink.count(target) == 9)
 
     // re-running refreshes in place — no duplicate accumulation

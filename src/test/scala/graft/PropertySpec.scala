@@ -40,12 +40,16 @@ class PropertySpec extends SparkSpec {
         s"cast(id % $groups as bigint) as g",
         "cast(hash(id) as double) as v",
         "id")
-      val viaWindow = df.withColumn("rn", row_number().over(
-          Window.partitionBy(col("g")).orderBy(col("v").desc, col("id"))))
-        .filter(col("rn") <= k).drop("rn")
-        .collect().map(_.toString).sorted
-      val viaCustom = TopK.perGroup(df, Seq("g"), Seq("v" -> true, "id" -> false), k)
-        .collect().map(_.toString).sorted
+      val (viaWindow, windowTopK) = withoutTopKRewrite {
+        val w = df.withColumn("rn", row_number().over(
+            Window.partitionBy(col("g")).orderBy(col("v").desc, col("id"))))
+          .filter(col("rn") <= k).drop("rn")
+        (w.collect().map(_.toString).sorted, plansTopK(w))
+      }
+      assert(!windowTopK, "reference side must plan as a plain window")
+      val custom = TopK.perGroup(df, Seq("g"), Seq("v" -> true, "id" -> false), k)
+      val viaCustom = custom.collect().map(_.toString).sorted
+      assert(plansTopK(custom))
       assert(viaCustom.sameElements(viaWindow), s"mismatch at n=$n k=$k groups=$groups")
     }
   }

@@ -20,14 +20,12 @@ class Round10OpsSpec extends SparkSpec {
       shingleDfCap = Some(0)).collect().map(_.toString).toSeq
     assert(dflt == uncapped,
       "df-100 guard must be result-invariant where no shingle is hot")
-    val key = "spark.graft.dedup.shingleDfCap"
-    spark.conf.set(key, "3")
-    try {
+    withConf("spark.graft.dedup.shingleDfCap" -> "3") {
       val viaConf = Dedup.ddNgramJaccard(spark, sf0001).collect().map(_.toString).toSeq
       val viaParam = Dedup.ddNgramJaccard(spark, sf0001,
         shingleDfCap = Some(3)).collect().map(_.toString).toSeq
       assert(viaConf == viaParam, "session conf must drive the default cap")
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("containment carries the same default guard: default == Some(100) == uncapped at this scale") {
@@ -271,9 +269,8 @@ class Round10OpsSpec extends SparkSpec {
     // explicit uncapped restores everything
     assert(pairsOf(Some(0)) == famPairs + ((10L, 11L)))
     // session-conf dial drives the default
-    spark.conf.set("spark.graft.mm.phashFamilyCap", "3")
-    try assert(pairsOf(None) == Set((10L, 11L)), "conf must drive the default cap")
-    finally spark.conf.unset("spark.graft.mm.phashFamilyCap")
+    withConf("spark.graft.mm.phashFamilyCap" -> "3")(
+      assert(pairsOf(None) == Set((10L, 11L)), "conf must drive the default cap"))
     // the suppressed family is exactly what the linear exact-dup pass reports
     val exact = operators.Multimodal.mmExactDup(spark, dir).collect()
     assert(exact.exists(r => r.getAs[Long]("n_copies") == 5L),

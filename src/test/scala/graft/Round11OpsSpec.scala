@@ -42,8 +42,7 @@ class Round11OpsSpec extends SparkSpec {
     // r15: the pair table rides the snapshot store, which would hide
     // the guard mechanism behind a parquet read — disable it so the
     // plan probe sees the real build
-    spark.conf.set("spark.graft.graph.edgeSnapshot", "false")
-    try {
+    withConf("spark.graft.graph.edgeSnapshot" -> "false") {
       val capped = Dedup.ddNgramJaccard(spark, dir, shingleDfCap = Some(3))
       val p = capped.queryExecution.optimizedPlan.toString
       assert(!p.contains("LeftAnti"),
@@ -54,7 +53,7 @@ class Round11OpsSpec extends SparkSpec {
       // 6-family's pairwise jaccard falls below threshold
       assert(!pairs.exists(pr => pr._1 <= 6 && pr._2 <= 6),
         s"boilerplate-only pairs must not pass the jaccard gate: $pairs")
-    } finally spark.conf.unset("spark.graft.graph.edgeSnapshot")
+    }
   }
 
   test("two-phase guard probe: oversized stop list falls back to the anti-join path, values unchanged") {
@@ -73,23 +72,19 @@ class Round11OpsSpec extends SparkSpec {
     // paths are value-identical by design), so the second call would
     // otherwise read the first call's snapshot and never exercise the
     // anti-join fallback
-    spark.conf.set("spark.graft.graph.edgeSnapshot", "false")
-    val inline = Dedup.ddNgramJaccard(spark, dir, shingleDfCap = Some(3))
-      .collect().map(_.toString).toSeq
-    Dedup.clearHotKeyCache()
-    spark.conf.set("spark.graft.dedup.hotKeyInlineLimit", "0")
-    try {
-      val viaJoin = Dedup.ddNgramJaccard(spark, dir, shingleDfCap = Some(3))
-      val p = viaJoin.queryExecution.optimizedPlan.toString
-      assert(p.contains("LeftAnti"),
-        s"limit 0 must force the anti-join fallback:\n$p")
-      assert(viaJoin.collect().map(_.toString).toSeq == inline,
-        "fallback path must produce identical values")
-    } finally {
-      spark.conf.unset("spark.graft.dedup.hotKeyInlineLimit")
-      spark.conf.unset("spark.graft.graph.edgeSnapshot")
+    try withConf("spark.graft.graph.edgeSnapshot" -> "false") {
+      val inline = Dedup.ddNgramJaccard(spark, dir, shingleDfCap = Some(3))
+        .collect().map(_.toString).toSeq
       Dedup.clearHotKeyCache()
-    }
+      withConf("spark.graft.dedup.hotKeyInlineLimit" -> "0") {
+        val viaJoin = Dedup.ddNgramJaccard(spark, dir, shingleDfCap = Some(3))
+        val p = viaJoin.queryExecution.optimizedPlan.toString
+        assert(p.contains("LeftAnti"),
+          s"limit 0 must force the anti-join fallback:\n$p")
+        assert(viaJoin.collect().map(_.toString).toSeq == inline,
+          "fallback path must produce identical values")
+      }
+    } finally Dedup.clearHotKeyCache()
   }
 
   test("probe cache serves sibling consumers: containment and jaccard share one shingle census") {

@@ -78,25 +78,17 @@ class Round13OpsSpec extends SparkSpec {
     // q32 is one of the 12 `rn === 1` call sites: the high-cardinality
     // per-user latest-snapshot — exactly where the bounded-heap combiner
     // beats the full per-group window sort at scale
-    import org.apache.spark.sql.graft.{TopKPerGroupRewrite, TopKPerGroupStrategy}
-    val plain = graft.operators.Analytics.q32LatestPerKey(spark, sf0001).collect()
-    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
-    }
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ TopKPerGroupRewrite
-    try {
+    val (plain, plainTopK) = withoutTopKRewrite {
       val df = graft.operators.Analytics.q32LatestPerKey(spark, sf0001)
-      val rewritten = df.collect()
-      assert(df.queryExecution.executedPlan.toString.contains("TopKPerGroup"),
-        s"rule did not fire on the rn === 1 shape:\n${df.queryExecution.executedPlan}")
-      assert(rewritten.map(_.toString).toSeq == plain.map(_.toString).toSeq,
-        "rn === 1 rewrite must be result-identical")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == TopKPerGroupRewrite)
+      (df.collect(), plansTopK(df))
     }
+    assert(!plainTopK, "reference side must plan as a plain window")
+    val df = graft.operators.Analytics.q32LatestPerKey(spark, sf0001)
+    val rewritten = df.collect()
+    assert(plansTopK(df),
+      s"rule did not fire on the rn === 1 shape:\n${df.queryExecution.executedPlan}")
+    assert(rewritten.map(_.toString).toSeq == plain.map(_.toString).toSeq,
+      "rn === 1 rewrite must be result-identical")
   }
 
   test("dd_dup_spans: driver-recomputed ExactSubstr spans reproduce the per-doc table exactly") {
@@ -209,19 +201,14 @@ class Round13OpsSpec extends SparkSpec {
     assert(topParts().toSet == Set(200L, 201L),
       "rewritten corpus must rebuild the bipartite snapshot")
     // snapshot OFF: inline build, identical values
-    spark.conf.set("spark.graft.graph.edgeSnapshot", "false")
-    try {
-      val inline = Analytics.q177Hits(spark, dir).collect().map(_.toString).toSeq
-      spark.conf.unset("spark.graft.graph.edgeSnapshot")
-      val snap = Analytics.q177Hits(spark, dir).collect().map(_.toString).toSeq
-      assert(inline == snap, "snapshot path must be value-identical to the inline build")
-    } finally spark.conf.unset("spark.graft.graph.edgeSnapshot")
+    def hits() = Analytics.q177Hits(spark, dir).collect().map(_.toString).toSeq
+    val inline = withConf("spark.graft.graph.edgeSnapshot" -> "false")(hits())
+    assert(inline == hits(), "snapshot path must be value-identical to the inline build")
     Analytics.releaseEdgeSnapshots(spark)
   }
 
   test("TopKPerGroupRewrite: rn === k for k > 1 keeps exactly the rank-k row (Window re-ranks the k survivors)") {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.graft.{TopKPerGroupRewrite, TopKPerGroupStrategy}
     import org.apache.spark.sql.functions._
     def rank2() = Tables.orders(spark, sf0001)
       .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
@@ -230,23 +217,14 @@ class Round13OpsSpec extends SparkSpec {
           .orderBy(col("o_totalprice").desc, col("o_orderkey"))))
       .filter(col("rn") === 2)
       .orderBy(col("o_orderpriority"))
-    val plain = rank2().collect()
-    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
+    val (plain, plainTopK) = withoutTopKRewrite {
+      val df = rank2(); (df.collect(), plansTopK(df))
     }
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ TopKPerGroupRewrite
-    try {
-      val df = rank2()
-      val rewritten = df.collect()
-      assert(df.queryExecution.executedPlan.toString.contains("TopKPerGroup"),
-        s"rule did not fire on rn === 2:\n${df.queryExecution.executedPlan}")
-      assert(rewritten.map(_.toString).toSeq == plain.map(_.toString).toSeq,
-        "rn === 2 must still select exactly the rank-2 row per group")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == TopKPerGroupRewrite)
-    }
+    assert(!plainTopK, "reference side must plan as a plain window")
+    val df = rank2()
+    val rewritten = df.collect()
+    assert(plansTopK(df), s"rule did not fire on rn === 2:\n${df.queryExecution.executedPlan}")
+    assert(rewritten.map(_.toString).toSeq == plain.map(_.toString).toSeq,
+      "rn === 2 must still select exactly the rank-2 row per group")
   }
 }

@@ -222,17 +222,23 @@ class Round3OpsSpec extends SparkSpec {
   }
 
   test("q63_topk_per_group: custom operator matches the window formulation exactly") {
-    val custom = Analytics.q63TopkPerGroup(spark, sf0001).collect()
+    val q63 = Analytics.q63TopkPerGroup(spark, sf0001)
+    val custom = q63.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(plansTopK(q63))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("o_orderpriority"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    val window = Tables.orders(spark, sf0001)
-      .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-      .orderBy(col("o_orderpriority"), col("o_totalprice").desc, col("o_orderkey"))
-      .drop("rn").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+    val (window, windowTopK) = withoutTopKRewrite {
+      val df = Tables.orders(spark, sf0001)
+        .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
+        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+        .orderBy(col("o_orderpriority"), col("o_totalprice").desc, col("o_orderkey"))
+        .drop("rn")
+      (df.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq,
+        plansTopK(df))
+    }
+    assert(!windowTopK, "reference side must plan as a plain window")
     assert(custom == window, "TopKPerGroup must be result-identical to the window form")
   }
 

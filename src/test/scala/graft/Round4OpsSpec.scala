@@ -47,12 +47,10 @@ class Round4OpsSpec extends SparkSpec {
         df, Seq("o_custkey"), Seq(("o_totalprice", true), ("o_orderkey", false)), 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val unguarded = run()
-    spark.conf.set("spark.graft.topk.maxGroupsPerTask", "3") // hundreds of custkeys → many flushes
-    try {
-      val guarded = run()
-      assert(guarded == unguarded,
-        "chunked partial passes must select the identical top-k rows")
-    } finally spark.conf.unset("spark.graft.topk.maxGroupsPerTask")
+    // hundreds of custkeys → many flushes
+    val guarded = withConf("spark.graft.topk.maxGroupsPerTask" -> "3")(run())
+    assert(guarded == unguarded,
+      "chunked partial passes must select the identical top-k rows")
   }
 
   test("dd_embed_cos lshBits: refined result is a score-identical subset of the exact result") {

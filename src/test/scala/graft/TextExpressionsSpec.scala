@@ -102,7 +102,6 @@ class TextExpressionsSpec extends SparkSpec {
   }
 
   test("SQL registration: word_ngrams/minhash_bands/md5_min/simhash60 callable from SQL") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT md5_min(word_ngrams('a b c d', 3)) m,
         |       minhash_bands(word_ngrams('a b c d', 3), 8, 4) bands,

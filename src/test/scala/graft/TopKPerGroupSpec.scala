@@ -8,16 +8,20 @@ class TopKPerGroupSpec extends SparkSpec {
 
   test("custom operator selects exactly the window-formulation rows") {
     val li = Tables.lineitem(spark, sf0001)
-    val viaWindow = li
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("l_returnflag")).orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))))
-      .filter(col("rn") <= 7).drop("rn")
-      .select("l_returnflag", "l_orderkey", "l_linenumber", "l_extendedprice")
-      .collect().map(_.toString).sorted
-    val viaCustom = TopK.perGroup(li, Seq("l_returnflag"),
+    val (viaWindow, windowTopK) = withoutTopKRewrite {
+      val df = li
+        .withColumn("rn", row_number().over(
+          Window.partitionBy(col("l_returnflag")).orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))))
+        .filter(col("rn") <= 7).drop("rn")
+        .select("l_returnflag", "l_orderkey", "l_linenumber", "l_extendedprice")
+      (df.collect().map(_.toString).sorted, plansTopK(df))
+    }
+    assert(!windowTopK, "reference side must plan as a plain window")
+    val custom = TopK.perGroup(li, Seq("l_returnflag"),
         Seq("l_extendedprice" -> true, "l_orderkey" -> false, "l_linenumber" -> false), 7)
       .select("l_returnflag", "l_orderkey", "l_linenumber", "l_extendedprice")
-      .collect().map(_.toString).sorted
+    val viaCustom = custom.collect().map(_.toString).sorted
+    assert(plansTopK(custom))
     assert(viaCustom.sameElements(viaWindow))
   }
 
@@ -38,8 +42,6 @@ class TopKPerGroupSpec extends SparkSpec {
   }
 
   test("rewrite rule: window row_number<=k auto-plans through TopKPerGroupExec, result-identical") {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.graft.{TopKPerGroupRewrite, TopKPerGroupStrategy}
     def windowTopk() = Tables.orders(spark, sf0001)
       .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
       .withColumn("rn", row_number().over(
@@ -47,49 +49,28 @@ class TopKPerGroupSpec extends SparkSpec {
           .orderBy(col("o_totalprice").desc, col("o_orderkey"))))
       .filter(col("rn") <= 3)
       .orderBy(col("o_orderpriority"), col("rn"))
-    val plain = windowTopk().collect()
-    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
+    val (plain, plainTopK) = withoutTopKRewrite {
+      val df = windowTopk(); (df.collect(), plansTopK(df))
     }
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ TopKPerGroupRewrite
-    try {
-      val df = windowTopk()
-      val rewritten = df.collect()
-      assert(df.queryExecution.executedPlan.toString.contains("TopKPerGroup"),
-        s"rule did not fire:\n${df.queryExecution.executedPlan}")
-      assert(rewritten.map(_.toString).toSeq == plain.map(_.toString).toSeq,
-        "rewrite must be result-identical including the rn column")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == TopKPerGroupRewrite)
-    }
+    assert(!plainTopK, "reference side must plan as a plain window")
+    val df = windowTopk()
+    val rewritten = df.collect()
+    assert(plansTopK(df), s"rule did not fire:\n${df.queryExecution.executedPlan}")
+    assert(rewritten.map(_.toString).toSeq == plain.map(_.toString).toSeq,
+      "rewrite must be result-identical including the rn column")
   }
 
   test("q73_reservoir under the production extensions: rewrite fires on the per-user window, result identical") {
-    // Bench/Verify/OdnsApp sessions enable GraftExtensions
-    // (spark.sql.extensions); this mirrors that injection on the shared
-    // test session and proves the gated q73 — a HIGH-cardinality
-    // partition key (per-user), the case the partial-pass spill guard
-    // exists for — plans through TopKPerGroupExec with identical rows.
-    import org.apache.spark.sql.graft.{TopKPerGroupRewrite, TopKPerGroupStrategy}
-    val plain = graft.operators.Analytics.q73Reservoir(spark, sf0001).collect()
-    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
-    }
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ TopKPerGroupRewrite
-    try {
+    // the gated q73 has a HIGH-cardinality partition key (per-user),
+    // the case the partial-pass spill guard exists for
+    val (plain, plainTopK) = withoutTopKRewrite {
       val df = graft.operators.Analytics.q73Reservoir(spark, sf0001)
-      val rewritten = df.collect()
-      assert(df.queryExecution.executedPlan.toString.contains("TopKPerGroup"),
-        s"rule did not fire on q73:\n${df.queryExecution.executedPlan}")
-      assert(rewritten.map(_.toString).toSeq == plain.map(_.toString).toSeq)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == TopKPerGroupRewrite)
+      (df.collect(), plansTopK(df))
     }
+    assert(!plainTopK, "reference side must plan as a plain window")
+    val df = graft.operators.Analytics.q73Reservoir(spark, sf0001)
+    val rewritten = df.collect()
+    assert(plansTopK(df), s"rule did not fire on q73:\n${df.queryExecution.executedPlan}")
+    assert(rewritten.map(_.toString).toSeq == plain.map(_.toString).toSeq)
   }
 }

@@ -53,16 +53,12 @@ class Round12OpsSpec extends SparkSpec {
     assert(kept(inline) == expected,
       s"inline path must keep cold + ALL null-keyed rows: ${kept(inline)}")
     // anti-join fallback path: identical keep-set
-    spark.conf.set("spark.graft.dedup.hotKeyInlineLimit", "0")
-    try {
+    try withConf("spark.graft.dedup.hotKeyInlineLimit" -> "0") {
       Dedup.clearHotKeyCache()
       val viaJoin = Dedup.dropHotKeys(spark, input, "k", 3, ("/nonexistent/r12b", "t"))
       assert(kept(viaJoin) == expected,
         s"anti-join path must keep the same rows: ${kept(viaJoin)}")
-    } finally {
-      spark.conf.unset("spark.graft.dedup.hotKeyInlineLimit")
-      Dedup.clearHotKeyCache()
-    }
+    } finally Dedup.clearHotKeyCache()
   }
 
   test("hot-key probe cache invalidates when the corpus at the path is rewritten in place") {
@@ -117,16 +113,11 @@ class Round12OpsSpec extends SparkSpec {
     assert(nodes() == Set(3L, 4L),
       "rewritten corpus must rebuild the edge snapshot, not serve node ranks of the old graph")
     // snapshot OFF: inline build, identical values
-    spark.conf.set("spark.graft.graph.edgeSnapshot", "false")
-    try {
-      val inline = Analytics.q57Pagerank(spark, dir)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      spark.conf.unset("spark.graft.graph.edgeSnapshot")
-      val snap = Analytics.q57Pagerank(spark, dir)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(inline == snap,
-        "snapshot path must be value-identical (bit-for-bit ranks) to the inline build")
-    } finally spark.conf.unset("spark.graft.graph.edgeSnapshot")
+    def ranks() = Analytics.q57Pagerank(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val inline = withConf("spark.graft.graph.edgeSnapshot" -> "false")(ranks())
+    assert(inline == ranks(),
+      "snapshot path must be value-identical (bit-for-bit ranks) to the inline build")
     // release deletes the materialized files and empties the store
     // (the no-leaked-RDD probe itself is Round4OpsSpec's assertion —
     // the snapshot is parquet, it never touches the block manager)
