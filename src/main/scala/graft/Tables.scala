@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables.
   *
@@ -13,8 +14,35 @@ import org.apache.spark.sql.functions._
   * (floor division for positive epochs).
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Session confs that change the type parquet inference gives a
+    * column; `nanosAsLong` decides whether `events.ts` reads as a long. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** (table path, inference confs) → (data fingerprint, schema). */
+  private val schemas = scala.collection.concurrent.TrieMap
+    .empty[(String, Seq[Option[String]]), (String, StructType)]
+
+  /** A parquet table read with its schema resolved once per data
+    * snapshot: inference reads footers in a Spark job, so only the first
+    * load of a snapshot (or one under different inference confs) pays
+    * it, and every later load builds its plan without running a job. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val fp = snapshotFingerprint(spark, path)
+    val key = (path, InferenceConfs.map(spark.conf.getOption))
+    val schema = schemas.get(key) match {
+      case Some((`fp`, s)) => s
+      case _ =>
+        val s = spark.read.parquet(path).schema
+        schemas.put(key, (fp, s))
+        s
+    }
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** events with `ts` converted to a proper microsecond TimestampType.
     *

@@ -19,8 +19,13 @@ object Typers {
   def tryOdnsTimestamp(c: Column): Column =
     try_to_timestamp(c, lit(OdnsTimestampFormat))
 
-  /** floatTyper: numeric parse or NULL (fieldtypers.py:19-23). */
-  def tryDouble(c: Column): Column = c.try_cast(DoubleType)
+  /** floatTyper: numeric parse or NULL (fieldtypers.py:19-23). Python's
+    * `float()` rejects a Java float-type suffix (`7d`, `1f`, ` 2.5D `)
+    * that Spark's cast accepts, so a number ending in one is NULL;
+    * `inf` keeps its value. */
+  def tryDouble(c: Column): Column =
+    when(c.rlike("[0-9.][dDfF]\\s*$"), lit(null).cast(DoubleType))
+      .otherwise(c.try_cast(DoubleType))
 
   /** The reference keeps None for empty strings (dataimporter.py:152-155). */
   def emptyToNull(c: Column): Column = nullif(c, lit(""))

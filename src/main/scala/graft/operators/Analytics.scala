@@ -938,21 +938,31 @@ object Analytics {
     * belongs in the lake, not in executor memory where it squats
     * across unrelated queries. The fingerprint keys the snapshot
     * (same path, different data → rebuild + old files deleted); one
-    * entry per (dir, tag) bounds the store. */
+    * entry per (dir, tag) bounds the store. Each entry keeps the built
+    * frame's schema, so a read-back infers nothing. A build runs under
+    * its key's own lock, so concurrent callers of one key share one
+    * build while other keys read on; a failed build deletes its
+    * directory and leaves no entry. */
+  private final case class Snapshot(fingerprint: String, path: String,
+      schema: org.apache.spark.sql.types.StructType)
+
   private val edgeSnapshots = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (String, String)]
+    .empty[(String, String), Snapshot]
+  private val snapshotLocks = scala.collection.concurrent.TrieMap
+    .empty[(String, String), Object]
 
   private def edgeSnapshotEnabled(spark: SparkSession): Boolean =
     spark.conf.getOption("spark.graft.graph.edgeSnapshot").forall(_.trim.toBoolean)
 
+  private def deletePath(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+  }
+
   /** Test hook / explicit release: delete every materialized edge
     * snapshot and forget the store. */
   private[graft] def releaseEdgeSnapshots(spark: SparkSession): Unit = {
-    edgeSnapshots.values.foreach { case (_, path) =>
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      fs.delete(p, true)
-    }
+    edgeSnapshots.values.foreach(s => deletePath(spark, s.path))
     edgeSnapshots.clear()
   }
 
@@ -964,21 +974,22 @@ object Analytics {
     if (!edgeSnapshotEnabled(spark)) return build
     val fp = Tables.snapshotFingerprint(spark, dir)
     val key = (dir, tag)
-    val path = edgeSnapshots.synchronized {
+    val snap = snapshotLocks.getOrElseUpdate(key, new Object).synchronized {
       edgeSnapshots.get(key) match {
-        case Some((`fp`, p)) => p
+        case Some(s) if s.fingerprint == fp => s
         case prev =>
           val p = java.nio.file.Files.createTempDirectory("graft_edges_").toString
-          build.write.mode("overwrite").parquet(p)
-          prev.foreach { case (_, old) =>
-            val op = new org.apache.hadoop.fs.Path(old)
-            op.getFileSystem(spark.sessionState.newHadoopConf()).delete(op, true)
-          }
-          edgeSnapshots.put(key, (fp, p))
-          p
+          val built = try {
+            val df = build
+            df.write.mode("overwrite").parquet(p)
+            Snapshot(fp, p, df.schema)
+          } catch { case e: Throwable => deletePath(spark, p); throw e }
+          prev.foreach(s => deletePath(spark, s.path))
+          edgeSnapshots.put(key, built)
+          built
       }
     }
-    spark.read.parquet(path)
+    spark.read.schema(snap.schema).parquet(snap.path)
   }
 
   private def copurchaseEdges(spark: SparkSession, dir: String,
@@ -986,8 +997,8 @@ object Analytics {
     snapshotTable(spark, dir, s"copurchase_$minSupport")(
       buildCopurchaseEdges(spark, dir, minSupport))
 
-  /** Materialize a provably-bounded final result (these graph
-    * queries end in `limit(25)` / a 4-row metric union), then
+  /** Materialize a provably-bounded final result (a few-row metric
+    * union, a per-hop count table), then
     * unpersist the intermediate caches it was built from. A
     * DataFrame-returning API must not leak session-lifetime cached
     * blocks: without this, every call left the edge cache in the
@@ -1030,10 +1041,9 @@ object Analytics {
     val edges = pairs.select($"a".as("src"), $"b".as("dst"))
       .unionAll(pairs.select($"b".as("src"), $"a".as("dst")))
     val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-    // iterative consumers: materialize the edge list once (GraphX-style)
-    // instead of re-deriving the basket expansion every iteration
+    // the edge list comes from the snapshot store, so each iteration
+    // re-reads its parquet instead of re-deriving the basket expansion
     val ed = edges.join(deg, "src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var pr = deg.select($"src".as("node"), lit(1.0).as("pr"))
     for (_ <- 1 to iters) {
       pr = ed.join(pr, $"src" === $"node")
@@ -1041,8 +1051,7 @@ object Analytics {
         .agg(expr("cast(sum(cast(round(pr / deg, 12) as decimal(30,12))) as double)").as("s"))
         .select($"dst".as("node"), round(lit(0.15) + lit(0.85) * $"s", 12).as("pr"))
     }
-    materializeAndRelease(spark,
-      pr.select($"node", $"pr").orderBy($"pr".desc, $"node").limit(25), ed)
+    pr.select($"node", $"pr").orderBy($"pr".desc, $"node").limit(25)
   }
 
   /** Retention cohort matrix: users grouped by first-activity week,
@@ -4951,7 +4960,7 @@ object Analytics {
     * centrality (Eppstein–Wang style seed sampling) is the standard
     * 100 TB posture — exact closeness is all-pairs and off the table;
     * the hop cap bounds state at |reachable ≤ 3|, and the result is a
-    * 5-row frame (materializeAndRelease — the q57 contract). */
+    * 5-row frame (materializeAndRelease). */
   def q187Harmonic(spark: SparkSession, dir: String, hops: Int = 3): DataFrame = {
     val pairs = copurchaseEdges(spark, dir)
     // r15 MEASURED DECLINE: persisting these edges hash-partitioned on

@@ -710,16 +710,22 @@ object Dedup {
   def ddComponents(spark: SparkSession, dir: String,
       shingleDfCap: Option[Int] = None): DataFrame =
     componentsFromPairs(spark, jaccardPairs(spark, dir, shingleDfCap)
-      .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint(true))
+      .select(col("doc_a"), col("doc_b")))
 
-  /** Components over an ALREADY-MATERIALIZED (doc_a, doc_b) pair set —
-    * the seam that lets a caller computing the pair set for its own
-    * purposes (pipe_split_leakage audits two split strategies over it)
-    * reuse ONE pair build instead of re-shingling the corpus. */
+  /** Components over a (doc_a, doc_b) pair set — the seam that lets a
+    * caller computing the pair set for its own purposes
+    * (pipe_split_leakage audits two split strategies over it) reuse ONE
+    * pair build instead of re-shingling the corpus. The path is chosen
+    * by one bounded probe: at most driverEdgeLimit + 1 pairs are
+    * collected, and a set that fits is labelled by union-find on the
+    * driver from those same rows. The probe reads one coalesced
+    * partition, so it is one job that stops at the limit; a limit over
+    * several partitions scans them in rounds, a job each. */
   private[operators] def componentsFromPairs(spark: SparkSession,
       pairs: DataFrame): DataFrame = {
-    if (pairs.count() <= driverEdgeLimit(spark)) return componentsUnionFind(spark, pairs)
+    val limit = driverEdgeLimit(spark)
+    val probe = pairs.coalesce(1).limit(math.min(limit, Int.MaxValue - 1L).toInt + 1).collect()
+    if (probe.length <= limit) return componentsUnionFind(spark, probe)
     val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .unionAll(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
       .localCheckpoint(true)
@@ -751,9 +757,9 @@ object Dedup {
     * the same (doc_id, min-reachable-id) labeling as the distributed
     * propagation. */
   private def componentsUnionFind(spark: SparkSession,
-      pairs: DataFrame): DataFrame = {
+      pairs: Array[org.apache.spark.sql.Row]): DataFrame = {
     import spark.implicits._
-    val es = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val es = pairs.map(r => (r.getLong(0), r.getLong(1)))
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x

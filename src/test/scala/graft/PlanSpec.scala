@@ -296,11 +296,9 @@ class PlanSpec extends SparkSpec {
 
   test("calendar-serial family: every ordered window sits above the day-keyed aggregate") {
     // q118's pair expansion has no window — its calendar contract is
-    // the join check below. q120 returns through materializeAndRelease
-    // (a LocalRelation — the plan is gone), but its serial stages are
-    // already bucket-bounded: both windows run over the ≤|priorities|×64
-    // bucket-count aggregate, and the pair table they rank within is
-    // calendar²-bounded by the same daily aggregate asserted here.
+    // the join check below. q120 has no window either: its median is a
+    // per-priority selection over the collected daily array, bounded
+    // by the calendar like the daily aggregate asserted here.
     assertWindowsConsumeDailyAgg(Analytics.q131Changepoint(spark, sf0001), "q131")
     assertWindowsConsumeDailyAgg(Analytics.q138ControlChart(spark, sf0001), "q138")
     assertWindowsConsumeDailyAgg(Analytics.q155BinarySeg(spark, sf0001), "q155")

@@ -21,11 +21,14 @@ class TypersSpec extends SparkSpec {
   }
 
   test("float typer nulls non-numeric input") {
-    val df = Seq("12345", "3.14", "AS1234", "").toDF("s")
-      .select(Typers.tryDouble(col("s")).as("d"))
-    val out = df.collect().map(r => Option(r.get(0)))
-    assert(out(0).contains(12345.0) && out(1).contains(3.14))
-    assert(out(2).isEmpty && out(3).isEmpty)
+    // Python's float() rejects a Java float-type suffix ("7d", "1f")
+    // and accepts exponents, infinities and surrounding spaces
+    val in = Seq("12345", "3.14", "AS1234", "", "7d", "1f", " 2.5D ", "3.F",
+      "1e3", "inf", "-Infinity", " 4.5 ")
+    val out = in.toDF("s").select(Typers.tryDouble(col("s")).as("d"))
+      .collect().map(r => Option(r.get(0)))
+    assert(out.toSeq == Seq(Some(12345.0), Some(3.14), None, None, None, None, None, None,
+      Some(1000.0), Some(Double.PositiveInfinity), Some(Double.NegativeInfinity), Some(4.5)))
   }
 
   test("empty string maps to null, other values pass through") {
